@@ -2,8 +2,8 @@
 in-repo analog of the reference's downstream graph querying (ProgQuery's
 users ask Cypher questions over the Neo4j graph it builds; the shipped
 program-analysis queries are the product, the extraction is the means —
-see the query evaluation in /root/reference's README and the
-insertNewQuery/getQueries surface, utils/ProgQueryDataBase.java). SURVEY
+see the query evaluation and the query surface described in the
+reference's README.md). SURVEY
 §2 scopes this repo as the extraction pipeline; this module gives a user
 switching from the reference SOMEWHERE to ask the same *kind* of
 questions — match typed nodes, walk labeled edges, filter on properties —
@@ -14,9 +14,11 @@ Design rules (the 100 TB contract):
 - Every step is a LAZY DataFrame transformation: an entire
   match -> hop -> filter -> aggregate chain compiles into one Catalyst
   plan. ``match(node_type=...)`` is a filter the optimizer pushes into
-  the node scan — and because the node frame is a union of per-family
-  subtrees whose node_type is a literal, constant folding prunes every
-  non-matching family's scan outright.
+  the node scan — over a lazily composed graph, whose node frame is a
+  union of per-family subtrees with a literal node_type, constant
+  folding prunes every non-matching family's scan outright; over stage
+  snapshots (the registered queries, queries.py) it becomes a parquet
+  data filter.
 - A hop is two equi-joins (node_id = src_id, then dst_id = node_id).
   AQE picks broadcast vs shuffled-hash per actual side size; there is no
   cartesian anywhere (plan-tested). On a warehouse bucketed by

@@ -52,8 +52,11 @@ from ..hashing import _A, _B, _M, perm_hash
 from ..session import register_sf_views
 
 # Frozen pool indices — one independent (a, b) pair per concern, so the
-# three keyings are pairwise-uncorrelated permutations of the id space
-# (indices 24-26: the minhash family uses 0-15, no overlap).
+# three keyings are pairwise-uncorrelated permutations of the id space.
+# No other id keying draws 24-26 (the minhash family uses 0-15).
+# similarity._fixed_centroid_rows also reads them, among all 32 pool
+# entries, but only as arithmetic seeds for a constant test-baseline
+# codebook: it keys no document, so no keying shares a permutation with it.
 _SPLIT_I, _SAMP_I, _PACK_I = 24, 25, 26
 _SPLIT_A, _SPLIT_B = _A[_SPLIT_I], _B[_SPLIT_I]
 _SAMP_A, _SAMP_B = _A[_SAMP_I], _B[_SAMP_I]
@@ -206,19 +209,16 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pack_documents(
-    spark: SparkSession,
-    sf_dir: str,
-    budget: int = PACK_BUDGET,
-    n_buckets: int = PACK_BUCKETS,
+    spark: SparkSession, sf_dir: str, n_buckets: int = PACK_BUCKETS
 ) -> DataFrame:
     """Pack composition: (bucket, pack_id, n_docs, sum_tokens) — the
-    window cumsum and chunk arithmetic certified against DuckDB's.
-    ``n_buckets`` is the documented scale knob: the default matches the
-    gate oracle; corpus-scale runs must raise it so per-bucket window
-    state stays executor-sized (tools/ops_scale.py tracks ~1 bucket per
-    50k docs)."""
+    window cumsum and chunk arithmetic certified against DuckDB's
+    (``pack_documents_sql(n_buckets)``, so a call at any bucket count has
+    its oracle). ``n_buckets`` is the documented scale knob: corpus-scale
+    runs must raise it so per-bucket window state stays executor-sized
+    (tools/ops_scale.py tracks ~1 bucket per 50k docs)."""
     return (
-        pack_documents(_docs(spark, sf_dir), budget=budget, n_buckets=n_buckets)
+        pack_documents(_docs(spark, sf_dir), n_buckets=n_buckets)
         .groupBy("bucket", "pack_id")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -228,10 +228,7 @@ def q_pack_documents(
 
 
 def q_corpus_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    budget: int = PACK_BUDGET,
-    n_buckets: int = PACK_BUCKETS,
+    spark: SparkSession, sf_dir: str, n_buckets: int = PACK_BUCKETS
 ) -> DataFrame:
     """The composed between-crawl-and-tokenizer chain as ONE Catalyst
     plan: exact-dedup the clone-augmented corpus (datagen's shared
@@ -246,7 +243,7 @@ def q_corpus_pipeline(
     (is_holdout / keeps_stratified), not self-joins, so they ride the
     scan: the chain's only wide stages are the dedup content-hash
     window, the keeper join, and the pack bucket window + final
-    aggregate."""
+    aggregate. Oracle: ``corpus_pipeline_sql(n_buckets)``."""
     from ..datagen import build_documents_with_dups
     from .dedup import dedup_exact_frame
 
@@ -259,7 +256,7 @@ def q_corpus_pipeline(
         passes_quality() & ~is_holdout() & keeps_stratified()
     )
     return (
-        pack_documents(survivors, budget=budget, n_buckets=n_buckets)
+        pack_documents(survivors, n_buckets=n_buckets)
         .groupBy("bucket", "pack_id")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -277,13 +274,43 @@ def queries():
     }
 
 
-def oracles():
-    from ..datagen import documents_with_dups_select
-
-    rate_case = "CASE " + " ".join(
+def _rate_case() -> str:
+    return "CASE " + " ".join(
         f"WHEN lang = '{lang}' THEN {pm}" for lang, pm in sorted(LANG_RATES.items())
     ) + f" ELSE {DEFAULT_RATE_PERMILLE} END"
-    corpus_pipeline = f"""
+
+
+def _pack_sql(docs: str, n_buckets: int) -> str:
+    """DuckDB replay of ``pack_documents`` + the per-pack aggregate over
+    the relation ``docs`` (doc_id, text)."""
+    return f"""
+        SELECT bucket, start_off // {PACK_BUDGET} AS pack_id,
+               COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens
+        FROM (
+          SELECT bucket, n_tokens,
+                 COALESCE(SUM(n_tokens) OVER (
+                   PARTITION BY bucket ORDER BY okey, doc_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                   AS start_off
+          FROM (SELECT doc_id,
+                       {_key_sql(_PACK_A, _PACK_B)} AS okey,
+                       {_key_sql(_PACK_A, _PACK_B)} % {n_buckets} AS bucket,
+                       len(string_split(text, ' ')) AS n_tokens
+                FROM {docs}))
+        GROUP BY bucket, pack_id
+        """
+
+
+def pack_documents_sql(n_buckets: int = PACK_BUCKETS) -> str:
+    """Oracle of ``q_pack_documents(..., n_buckets)``."""
+    return _pack_sql("documents", n_buckets)
+
+
+def corpus_pipeline_sql(n_buckets: int = PACK_BUCKETS) -> str:
+    """Oracle of ``q_corpus_pipeline(..., n_buckets)``."""
+    from ..datagen import documents_with_dups_select
+
+    return f"""
         WITH dups AS ({documents_with_dups_select()}),
         keepers AS (
           SELECT doc_id FROM (
@@ -305,30 +332,14 @@ def oracles():
         samp AS (
           SELECT * FROM train
           WHERE {_key_sql(_SAMP_A, _SAMP_B)} % 1000
-                < ({rate_case})
-        ),
-        toks AS (
-          SELECT doc_id,
-                 {_key_sql(_PACK_A, _PACK_B)} AS okey,
-                 {_key_sql(_PACK_A, _PACK_B)}
-                   % {PACK_BUCKETS} AS bucket,
-                 len(string_split(text, ' ')) AS n_tokens
-          FROM samp
-        ),
-        offs AS (
-          SELECT bucket, n_tokens,
-                 COALESCE(SUM(n_tokens) OVER (
-                   PARTITION BY bucket ORDER BY okey, doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   AS start_off
-          FROM toks
+                < ({_rate_case()})
         )
-        SELECT bucket, start_off // {PACK_BUDGET} AS pack_id,
-               COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens
-        FROM offs GROUP BY bucket, pack_id
-        """
+        {_pack_sql("samp", n_buckets)}"""
+
+
+def oracles():
     return {
-        "corpus_pipeline": corpus_pipeline,
+        "corpus_pipeline": corpus_pipeline_sql(),
         "sample_split": f"""
         SELECT split, COUNT(*) AS n_docs,
                CAST(SUM(t) AS BIGINT) AS sum_ws_tokens
@@ -342,24 +353,7 @@ def oracles():
         "sample_stratified": f"""
         SELECT doc_id, lang FROM documents
         WHERE {_key_sql(_SAMP_A, _SAMP_B)} % 1000
-              < ({rate_case})
+              < ({_rate_case()})
         """,
-        "pack_documents": f"""
-        SELECT bucket, start_off // {PACK_BUDGET} AS pack_id,
-               COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens
-        FROM (
-          SELECT bucket, n_tokens,
-                 COALESCE(SUM(n_tokens) OVER (
-                   PARTITION BY bucket ORDER BY okey, doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   AS start_off
-          FROM (SELECT doc_id,
-                       {_key_sql(_PACK_A, _PACK_B)}
-                         AS okey,
-                       {_key_sql(_PACK_A, _PACK_B)}
-                         % {PACK_BUCKETS} AS bucket,
-                       len(string_split(text, ' ')) AS n_tokens
-                FROM documents))
-        GROUP BY bucket, pack_id
-        """,
+        "pack_documents": pack_documents_sql(),
     }

@@ -2,9 +2,26 @@
 
 Each callable takes (spark, sf_dir) and returns a DataFrame whose columns /
 types align exactly with the matching ``oracle.*_sql()`` DuckDB query.
-Every query is a lazy composition of the real pipeline stages — nothing is
-special-cased for the oracle; the driver's value-hash compare therefore
-certifies the production code path.
+Every query reads a stage snapshot of the production ``Pipeline``
+(pipeline.py) — the graph is assembled once, by the same stage DAG the CLI
+and the warehouse run, and each query answers over the stored stages, the
+way ProgQuery builds its graph once and answers every query over it.
+Nothing is special-cased for the oracle; the correctness gate's value-hash
+compare therefore certifies the production code path.
+
+Query warehouses: one ``Pipeline`` per (session, sf_dir, fuzzy) in a temp
+directory, lineage off. ``_stage`` runs it resumably up to the stage a
+query needs, so the pipeline manifest memoizes every stage: a session
+builds each stage at most once, and parquet stages carry the statistics
+AQE needs to pick broadcast joins by itself. Exact-linking queries read
+the ``fuzzy=False`` warehouse — its alias map is the identity, so its
+ALIAS nodes and ALIAS_OF edges are empty and its nodes/edges stages are
+exactly the exact-linking graph; kg_fuzzy_pairs,
+kg_triples_canonical_fuzzy and kg_link_edges read the ``fuzzy=True``
+warehouse. A stage is built once per session, so an sf_dir must not change
+while its warehouse lives. ``clear_query_caches()`` deletes the
+warehouses: call it after rewriting an input, or between datasets in a
+long-lived service (interpreter exit deletes them too).
 
 Inventory mapping (SURVEY.md §2):
   kg_transcripts        S2/S3  source synthesis (conv reassembly input)
@@ -30,133 +47,60 @@ Inventory mapping (SURVEY.md §2):
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .canonicalize.cc import canonical_map, connected_components
-from .canonicalize.remap import canonicalize_triples
-from .datagen import build_transcripts
-from .extraction.extract import extract, mentions_of, triples_of
-from .graph.materialize import build_edges, build_nodes
-from .graph.passes import (
-    consensus_modality,
-    entity_reachability,
-    flow_edges,
-    must_reach_fixpoint,
-    salted_mention_counts,
-)
-from .linking.exact import (
-    alias_edges_from_stats,
-    link_entities,
-    link_entities_from_stats,
-    surface_stats,
-)
-from .linking.fuzzy import (
-    alias_edges_from_scored,
-    fuzzy_alias_edges,
-    fuzzy_scored_pairs,
-    may_pairs_from_scored,
-)
+from .extraction.extract import mentions_of, triples_of
+from .graph.passes import entity_reachability, flow_edges, must_reach_fixpoint
+from .graph.query import PropertyGraph
+from .linking.fuzzy import alias_edges_from_scored
+from .pipeline import Pipeline
 
-
-def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return build_transcripts(spark, sf_dir)
-
-
-# One extraction pass per (session, sf_dir): without a materialization
-# barrier, a query that consumes both mentions_of(ex) and triples_of(ex)
-# holds the mapInPandas subtree twice in one plan and Spark may run the
-# regex pass twice (ReuseExchange is not guaranteed across mapInPandas).
-# The pipeline path avoids this with stage snapshots; the bare query path
-# localCheckpoints the extraction once and every query of the session
-# reuses it (keyed by applicationId so a stopped session's entries can
-# never be returned to a new one).
-#
-# Eviction: entries (and the checkpointed blocks they pin) live until the
-# session stops — correct for the driver gate and bench (one session, a
-# few sf_dirs), but a long-lived service iterating many sf_dirs should
-# call clear_query_caches() between datasets.
-_EX_CACHE: dict[tuple[str, str], DataFrame] = {}
+# (applicationId, sf_dir, fuzzy) -> the query warehouse's Pipeline; keyed
+# by session so a stopped session's Pipeline is never handed to a new one.
+# The lock serializes stage builds: two threads materializing one stage
+# would race on its tmp dir and the manifest file.
+_PIPELINES: dict[tuple[str, str, bool], Pipeline] = {}
+_LOCK = threading.Lock()
 
 
 def clear_query_caches() -> None:
-    """Drop the per-session extraction/alias-map checkpoints (releases the
-    pinned localCheckpoint blocks; see _EX_CACHE eviction note)."""
-    _EX_CACHE.clear()
-    _AMAP_CACHE.clear()
+    """Delete the query warehouses (and the trained-codebook cache)."""
+    with _LOCK:
+        for pipe in _PIPELINES.values():
+            shutil.rmtree(pipe.warehouse, ignore_errors=True)
+        _PIPELINES.clear()
     from .ops.similarity import _CB_CACHE
 
     _CB_CACHE.clear()
 
 
-def _extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _EX_CACHE.get(key)
-    if df is None:
-        df = extract(_transcripts(spark, sf_dir)).localCheckpoint(eager=True)
-        _EX_CACHE[key] = df
-    return df
+atexit.register(clear_query_caches)
 
 
-def _alias_map_from_stats(stats: DataFrame) -> DataFrame:
-    labels, _ = connected_components(alias_edges_from_stats(stats))
-    return canonical_map(
-        labels, stats.select("norm_key").dropDuplicates(["norm_key"])
-    )
-
-
-def _alias_map(mentions: DataFrame, entities: DataFrame) -> DataFrame:
-    labels, _ = connected_components(
-        alias_edges_from_stats(surface_stats(mentions))
-    )
-    return canonical_map(labels, entities.select("norm_key"))
-
-
-# Exact alias map cached per (session, sf_dir), like _EX_CACHE: the CC
-# loop is driver-coordinated (per-round jobs), so nine oracle queries
-# re-running it from scratch is pure waste. Fixture-fed helpers above stay
-# uncached (content isn't keyable by path).
-_AMAP_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _alias_map_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _AMAP_CACHE.get(key)
-    if df is None:
-        m = mentions_of(_extraction(spark, sf_dir))
-        df = _alias_map_from_stats(surface_stats(m)).localCheckpoint(eager=True)
-        # SIZE-GATED broadcast hint (VERDICT r2 #1: no unconditional
-        # hints). A checkpointed frame carries no Catalyst stats, so
-        # every downstream join would pay an AQE runtime conversion
-        # (measured: q_canonical 9.5 -> ~20 s at sf0.1). The frame is
-        # already materialized, so one aggregation over it is cheap; hint
-        # ONLY when the MEASURED bytes — actual key byte lengths plus
-        # ~48 B/row of UnsafeRow + hashed-relation overhead, not a
-        # hardcoded per-row constant (ADVICE r3: long surface keys could
-        # pass a count*96 gate while the real broadcast is far larger) —
-        # fit the session threshold. At billion-entity scale the gate
-        # fails and the joins stay shuffled.
-        try:
-            thr = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-        except ValueError:  # e.g. "10m" form — be conservative, no hint
-            thr = -1
-        if thr > 0:
-            est = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.octet_length("norm_key") + F.octet_length("canonical_key")
-                ).alias("key_bytes"),
-            ).collect()[0]
-            if (est["key_bytes"] or 0) + 48 * est["n"] <= thr:
-                df = F.broadcast(df)
-        _AMAP_CACHE[key] = df
-    return df
+def _stage(
+    spark: SparkSession, sf_dir: str, stage: str, fuzzy: bool = False
+) -> DataFrame:
+    """The named stage of this session's query warehouse for ``sf_dir``,
+    materialized on first use (with every upstream stage it needs)."""
+    key = (spark.sparkContext.applicationId, sf_dir, fuzzy)
+    with _LOCK:
+        pipe = _PIPELINES.get(key)
+        if pipe is None:
+            pipe = _PIPELINES[key] = Pipeline(
+                spark, tempfile.mkdtemp(prefix="pq_query_wh_"), lineage=False
+            )
+        return pipe.run(sf_dir=sf_dir, resume=True, fuzzy=fuzzy, until=stage)[stage]
 
 
 def q_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _transcripts(spark, sf_dir).select(
+    return _stage(spark, sf_dir, "transcripts").select(
         "conv_id",
         "turn_idx",
         "role",
@@ -167,48 +111,40 @@ def q_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return mentions_of(_extraction(spark, sf_dir))
+    return mentions_of(_stage(spark, sf_dir, "extraction"))
 
 
 def q_triples_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return triples_of(_extraction(spark, sf_dir))
+    return triples_of(_stage(spark, sf_dir, "extraction"))
 
 
 def q_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return link_entities(mentions_of(_extraction(spark, sf_dir)))
+    return _stage(spark, sf_dir, "entities")
 
 
 def q_alias_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _alias_map_cached(spark, sf_dir)
+    return _stage(spark, sf_dir, "alias_map")
 
 
 def q_triples_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ex = _extraction(spark, sf_dir)
-    amap = _alias_map_cached(spark, sf_dir)
-    return canonicalize_triples(triples_of(ex), amap)
+    return _stage(spark, sf_dir, "triples_canonical")
 
 
 def q_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH blocking + structure-aware verify over the entity table
     (the north star's signature stage; reference analog:
     DefinitionCache.putDefinition unifying references through one key,
-    DefinitionCache.java:56-74 — generalized to approximate keys)."""
-    ents = link_entities(mentions_of(_extraction(spark, sf_dir)))
-    return fuzzy_alias_edges(ents).select("src", "dst")
+    DefinitionCache.java:56-74 — generalized to approximate keys): the
+    accepted pairs of the fuzzy warehouse's scored-pair stage."""
+    scored = _stage(spark, sf_dir, "fuzzy_pairs", fuzzy=True)
+    return alias_edges_from_scored(scored).select("src", "dst")
 
 
 def q_triples_canonical_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical triples with the fuzzy alias pairs unioned into the CC
     graph: typo'd supplier keys (datagen.supp_typo) collapse into their
     true entities before endpoint remapping."""
-    ex = _extraction(spark, sf_dir)
-    m = mentions_of(ex)
-    stats = surface_stats(m)
-    ents = link_entities_from_stats(stats)
-    edges = alias_edges_from_stats(stats).unionByName(fuzzy_alias_edges(ents))
-    labels, _ = connected_components(edges)
-    amap = canonical_map(labels, ents.select("norm_key"))
-    return canonicalize_triples(triples_of(ex), amap)
+    return _stage(spark, sf_dir, "triples_canonical", fuzzy=True)
 
 
 def q_link_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -216,34 +152,16 @@ def q_link_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges, J5 trace) and MAY_REFER_TO (sub-threshold fan-out with the
     trustable-pruning rule — HierarchyAnalysis.java:93-104,
     ASTAuxiliarStorage.java:48-62)."""
-    from .graph.materialize import alias_of_edges, may_refer_edges
-
-    ex = _extraction(spark, sf_dir)
-    m = mentions_of(ex)
-    stats = surface_stats(m)
-    ents = link_entities_from_stats(stats)
-    # the LSH self-join feeds two consumers (accepted + may) — checkpoint
-    # it once, mirroring the pipeline path's fuzzy_pairs stage snapshot
-    scored = fuzzy_scored_pairs(ents).localCheckpoint(eager=True)
-    edges = alias_edges_from_stats(stats).unionByName(
-        alias_edges_from_scored(scored)
+    return (
+        _stage(spark, sf_dir, "edges", fuzzy=True)
+        .filter(F.col("rel_type").isin("ALIAS_OF", "MAY_REFER_TO"))
+        .groupBy("rel_type")
+        .agg(F.count(F.lit(1)).alias("n"))
     )
-    labels, _ = connected_components(edges)
-    amap = canonical_map(labels, ents.select("norm_key"))
-    link = alias_of_edges(amap).unionByName(
-        may_refer_edges(m, ents, amap, may_pairs_from_scored(scored))
-    )
-    return link.groupBy("rel_type").agg(F.count(F.lit(1)).alias("n"))
 
 
 def q_node_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tr = _transcripts(spark, sf_dir)
-    ex = _extraction(spark, sf_dir)
-    m = mentions_of(ex)
-    stats = surface_stats(m)
-    ents = link_entities_from_stats(stats)
-    amap = _alias_map_cached(spark, sf_dir)
-    nodes = build_nodes(tr, m, ents, amap)
+    nodes = _stage(spark, sf_dir, "nodes")
     return nodes.groupBy("node_type").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -252,18 +170,12 @@ def q_node_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     ENTITY-family nodes carry n_mentions/n_surfaces, TURN nodes carry
     n_chars — summed per node_type so the value hash certifies the
     attribute values themselves."""
-    tr = _transcripts(spark, sf_dir)
-    ex = _extraction(spark, sf_dir)
-    m = mentions_of(ex)
-    stats = surface_stats(m)
-    ents = link_entities_from_stats(stats)
-    amap = _alias_map_cached(spark, sf_dir)
-    nodes = build_nodes(tr, m, ents, amap)
     v = F.coalesce(
         F.col("props")["n_mentions"], F.col("props")["n_chars"]
     ).cast("long")
     return (
-        nodes.filter(F.col("node_type").isin(
+        _stage(spark, sf_dir, "nodes")
+        .filter(F.col("node_type").isin(
             "TURN", "CUSTOMER", "NATION", "ORDER", "PART", "SUPPLIER"
         ))
         .groupBy("node_type")
@@ -272,12 +184,7 @@ def q_node_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_edge_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tr = _transcripts(spark, sf_dir)
-    ex = _extraction(spark, sf_dir)
-    m = mentions_of(ex)
-    amap = _alias_map_cached(spark, sf_dir)
-    tcanon = canonicalize_triples(triples_of(ex), amap)
-    edges = build_edges(tr, m, tcanon, amap).unionByName(flow_edges(tr))
+    edges = _stage(spark, sf_dir, "edges")
     return edges.groupBy("rel_graph", "rel_type").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -290,12 +197,6 @@ def q_edge_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     PDGProcessing.java:299-321). Aggregated per rel_type so the value
     hash certifies every edge's props, not just their presence; for
     REFERS_TO, sum_v = number of declaring mentions."""
-    tr = _transcripts(spark, sf_dir)
-    ex = _extraction(spark, sf_dir)
-    m = mentions_of(ex)
-    amap = _alias_map_cached(spark, sf_dir)
-    tcanon = canonicalize_triples(triples_of(ex), amap)
-    edges = build_edges(tr, m, tcanon, amap).unionByName(flow_edges(tr))
     v = F.when(
         F.col("rel_type") == "REFERS_TO",
         (F.col("props")["role"] == "declares").cast("long"),
@@ -305,7 +206,8 @@ def q_edge_props(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        edges.filter(
+        _stage(spark, sf_dir, "edges")
+        .filter(
             F.col("rel_graph").isin("FLOW", "SEMANTIC")
             | (F.col("rel_type") == "REFERS_TO")
         )
@@ -320,7 +222,7 @@ def q_tool_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceptionType/methodName, ASTAuxiliarStorage.java:106-131), the edge
     count and total gap seconds. Certifies the prop VALUES, not just
     their presence."""
-    tr = _transcripts(spark, sf_dir)
+    tr = _stage(spark, sf_dir, "transcripts")
     e = flow_edges(tr).filter(F.col("rel_type") == "TOOL_RESULT_OF")
     return e.groupBy(F.col("props")["tool"].alias("tool")).agg(
         F.count(F.lit(1)).alias("n"),
@@ -334,21 +236,16 @@ def q_node_categories(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-label hypernym attachment itself (reference:
     DatabaseFacade.addMultiLabelHypernyms, DatabaseFacade.java:44-47;
     NodeTypes enum hypernym accumulation, NodeTypes.java:81-97)."""
-    tr = _transcripts(spark, sf_dir)
-    ex = _extraction(spark, sf_dir)
-    m = mentions_of(ex)
-    ents = link_entities_from_stats(surface_stats(m))
-    amap = _alias_map_cached(spark, sf_dir)
-    nodes = build_nodes(tr, m, ents, amap)
     return (
-        nodes.select("node_type", F.explode("categories").alias("category"))
+        _stage(spark, sf_dir, "nodes")
+        .select("node_type", F.explode("categories").alias("category"))
         .groupBy("node_type", "category")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
 
 def q_next_turn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tr = _transcripts(spark, sf_dir)
+    tr = _stage(spark, sf_dir, "transcripts")
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     return (
         tr.select(
@@ -364,7 +261,7 @@ def q_next_turn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_modality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return consensus_modality(q_triples_canonical(spark, sf_dir))
+    return _stage(spark, sf_dir, "modality")
 
 
 def q_must_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -380,26 +277,15 @@ def q_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_mention_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    m = mentions_of(_extraction(spark, sf_dir))
-    amap = _alias_map_cached(spark, sf_dir)
-    return salted_mention_counts(m, amap)
+    return _stage(spark, sf_dir, "mention_counts")
 
 
-def _property_graph(spark: SparkSession, sf_dir: str):
+def _property_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
     """Full property graph (all node families; structure + link + semantic
     + flow edges) wrapped in the ProgQuery-analog query surface."""
-    from .graph.query import PropertyGraph
-
-    tr = _transcripts(spark, sf_dir)
-    ex = _extraction(spark, sf_dir)
-    m = mentions_of(ex)
-    stats = surface_stats(m)
-    ents = link_entities_from_stats(stats)
-    amap = _alias_map_cached(spark, sf_dir)
-    tcanon = canonicalize_triples(triples_of(ex), amap)
-    nodes = build_nodes(tr, m, ents, amap)
-    edges = build_edges(tr, m, tcanon, amap).unionByName(flow_edges(tr))
-    return PropertyGraph(nodes, edges)
+    return PropertyGraph(
+        _stage(spark, sf_dir, "nodes"), _stage(spark, sf_dir, "edges")
+    )
 
 
 def q_gq_tool_callers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -410,10 +296,8 @@ def q_gq_tool_callers(spark: SparkSession, sf_dir: str) -> DataFrame:
     match TURN(name='tool') -[TOOL_RESULT_OF {tool}]-> TURN, grouped by
     the edge's tool prop and the destination turn's role."""
     g = _property_graph(spark, sf_dir)
-    # rel_graph is a LITERAL per edge family, so passing it lets constant
-    # folding prune every other family's subtree from the plan — rel_type
-    # alone cannot prune SEMANTIC edges (their rel_type is the data-borne
-    # pred column)
+    # rel_graph pins the edge family: rel_type alone would also match a
+    # SEMANTIC edge whose data-borne pred had the same name
     hop = g.match("TURN", name="tool").out(
         "TOOL_RESULT_OF", rel_graph="FLOW", into="TURN", edge_props=("tool",)
     )
@@ -589,32 +473,5 @@ def kg_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def kg_oracles() -> dict[str, str]:
     from . import oracle as O
 
-    return {
-        "kg_transcripts": O.transcripts_sql(),
-        "kg_mentions": O.mentions_sql(),
-        "kg_triples_raw": O.triples_raw_sql(),
-        "kg_entities": O.entities_sql(),
-        "kg_alias_map": O.alias_map_sql(),
-        "kg_triples_canonical": O.triples_canonical_sql(),
-        "kg_fuzzy_pairs": O.fuzzy_pairs_sql(),
-        "kg_triples_canonical_fuzzy": O.triples_canonical_fuzzy_sql(),
-        "kg_link_edges": O.link_edges_sql(),
-        "kg_node_counts": O.node_counts_sql(),
-        "kg_node_props": O.node_props_sql(),
-        "kg_node_categories": O.node_categories_sql(),
-        "kg_edge_counts": O.edge_counts_sql(),
-        "kg_edge_props": O.edge_props_sql(),
-        "kg_next_turn": O.next_turn_sql(),
-        "kg_tool_provenance": O.tool_provenance_sql(),
-        "kg_modality": O.modality_sql(),
-        "kg_must_reach": O.must_reach_sql(),
-        "kg_reachability": O.reachability_sql(),
-        "kg_mention_counts": O.mention_counts_sql(),
-        "kg_gq_tool_callers": O.gq_tool_callers_sql(),
-        "kg_gq_entity_reach": O.gq_entity_reach_sql(),
-        "kg_gq_assistant_mentions": O.gq_assistant_mentions_sql(),
-        "kg_gq_customer_orbit": O.gq_customer_orbit_sql(),
-        "kg_gq_supplier_upstream": O.gq_supplier_upstream_sql(),
-        "kg_gq_part_early_slots": O.gq_part_early_slots_sql(),
-        "kg_gq_turn_tool_coverage": O.gq_turn_tool_coverage_sql(),
-    }
+    # the oracle of every kg_<name> query is oracle.<name>_sql()
+    return {name: getattr(O, f"{name[3:]}_sql")() for name in kg_queries()}

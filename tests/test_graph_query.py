@@ -7,7 +7,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from progquery_spark import queries as Q
+from progquery_spark.canonicalize.remap import canonicalize_triples
+from progquery_spark.datagen import build_transcripts
+from progquery_spark.extraction.extract import mentions_of, triples_of
+from progquery_spark.graph.materialize import build_edges, build_nodes
+from progquery_spark.graph.passes import flow_edges
 from progquery_spark.graph.query import PropertyGraph
+from progquery_spark.linking.exact import link_entities
 
 SF = "/root/testdata/sf0.001"
 
@@ -23,6 +29,24 @@ def _plan(df) -> str:
 @pytest.fixture(scope="module")
 def g(spark):
     return Q._property_graph(spark, SF)
+
+
+@pytest.fixture(scope="module")
+def lazy_g(spark):
+    """The same graph composed lazily by build_nodes/build_edges over the
+    synthesized transcripts, with the extraction and alias-map stages
+    standing in for materialized inputs. Family pruning is a property of
+    that composition (each family subtree carries literal rel_graph /
+    node_type columns); the nodes/edges stages behind ``g`` hold those
+    values as data."""
+    tr = build_transcripts(spark, SF)
+    ex = Q._stage(spark, SF, "extraction")
+    m = mentions_of(ex)
+    amap = Q._stage(spark, SF, "alias_map")
+    nodes = build_nodes(tr, m, link_entities(m), amap)
+    tcanon = canonicalize_triples(triples_of(ex), amap)
+    edges = build_edges(tr, m, tcanon, amap).unionByName(flow_edges(tr))
+    return PropertyGraph(nodes, edges)
 
 
 def test_match_filters_by_type_and_name(g):
@@ -87,14 +111,11 @@ def test_carry_survives_second_hop_and_collision_raises(g):
 
 
 def test_registered_gq_plans_are_clean(spark):
-    """No cartesians / nested-loop joins anywhere in the lazily-planned
-    registered graph-surface queries (the star queries have their own
-    plan test). Family pruning itself is regression-guarded by operator
-    counts in test_rel_graph_and_into_literals_prune_families — note it
-    prunes the EDGE side fully (rel_graph literals fold whole families)
-    while the node side keeps the entity family's runtime filter (its
-    node_type is data-borne), so checkpoint scans can legitimately
-    remain in a FLOW-only plan."""
+    """No cartesians / nested-loop joins anywhere in the registered
+    graph-surface queries over the nodes/edges stages (the star queries
+    have their own plan test). Family pruning of a lazily composed graph
+    is regression-guarded by operator counts in
+    test_rel_graph_and_into_literals_prune_families."""
     for fn in (Q.q_gq_tool_callers, Q.q_gq_entity_reach,
                Q.q_gq_assistant_mentions, Q.q_gq_part_early_slots,
                Q.q_gq_turn_tool_coverage):
@@ -103,7 +124,7 @@ def test_registered_gq_plans_are_clean(spark):
         assert "BroadcastNestedLoopJoin" not in plan, fn.__name__
 
 
-def test_rel_graph_and_into_literals_prune_families(g):
+def test_rel_graph_and_into_literals_prune_families(lazy_g):
     """The two pruning knobs measurably shrink the physical plan:
     rel_graph folds away the SEMANTIC edge family (whose rel_type is the
     data-borne pred column and therefore survives a rel_type-only
@@ -111,7 +132,7 @@ def test_rel_graph_and_into_literals_prune_families(g):
     alias-map joins stay in the plan); ``into`` folds the non-matching
     node families out of the destination-side union, removing their
     parquet scans outright."""
-    base = g.match("TURN", name="tool")
+    base = lazy_g.match("TURN", name="tool")
     unpruned = _plan(base.out("TOOL_RESULT_OF").df())
     by_graph = _plan(base.out("TOOL_RESULT_OF", rel_graph="FLOW").df())
     # SEMANTIC gone: fewer aggregates (the triple-dedup groupBy), fewer

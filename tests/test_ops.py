@@ -923,6 +923,28 @@ def test_sampling_pack_documents_invariants(spark):
             run += r["n_tokens"]
 
 
+def test_sampling_packing_oracles_follow_n_buckets(spark):
+    """A non-default bucket count (the ops_scale knob) is certified by
+    the same oracle formula: pack_documents and corpus_pipeline at
+    n_buckets=3 equal their DuckDB replays at n_buckets=3."""
+    import duckdb
+
+    from progquery_spark.ops import sampling
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
+    )
+    for q, sql in (
+        (sampling.q_pack_documents, sampling.pack_documents_sql),
+        (sampling.q_corpus_pipeline, sampling.corpus_pipeline_sql),
+    ):
+        got = sorted(tuple(r) for r in q(spark, SF, n_buckets=3).collect())
+        want = sorted(con.execute(sql(n_buckets=3)).fetchall())
+        assert got == want, q.__name__
+        assert {r[0] for r in got} == {0, 1, 2}
+
+
 def test_sampling_split_and_sample_plans_are_shuffle_free(spark):
     """Split assignment and stratified sampling are pure projections —
     zero exchanges, so at 100 TB they ride the scan. The REGISTERED

@@ -22,6 +22,17 @@ def _plan(df) -> str:
     )
 
 
+def _exact_alias_map(stats):
+    """The exact-linking alias map: connected components of the
+    surface<->norm alias graph, reduced to canonical keys (the identity
+    map — the pipeline's alias_map stage with fuzzy linking off)."""
+    from progquery_spark.canonicalize.cc import canonical_map, connected_components
+    from progquery_spark.linking.exact import alias_edges_from_stats
+
+    labels, _ = connected_components(alias_edges_from_stats(stats))
+    return canonical_map(labels, stats.select("norm_key"))
+
+
 def test_kind_partition_pruning(spark, tmp_path):
     tr = to_spark(spark, make_fixture(n_convs=4))
     path = str(tmp_path / "ex")
@@ -43,11 +54,10 @@ def test_remap_broadcasts_alias_map(spark):
     (AQE-final) plan after running the query."""
     from progquery_spark.canonicalize.remap import canonicalize_triples
     from progquery_spark.linking.exact import surface_stats
-    from progquery_spark.queries import _alias_map_from_stats
 
     tr = to_spark(spark, make_fixture(n_convs=4))
     ex = extract(tr)
-    amap = _alias_map_from_stats(surface_stats(mentions_of(ex)))
+    amap = _exact_alias_map(surface_stats(mentions_of(ex)))
     out = canonicalize_triples(triples_of(ex), amap)
     out.collect()
     plan = _plan(out)
@@ -61,11 +71,10 @@ def test_remap_falls_back_to_shuffle_without_hint(spark):
     size (the 10^12-turn OOM scenario)."""
     from progquery_spark.canonicalize.remap import canonicalize_triples
     from progquery_spark.linking.exact import surface_stats
-    from progquery_spark.queries import _alias_map_from_stats
 
     tr = to_spark(spark, make_fixture(n_convs=4))
     ex = extract(tr)
-    amap = _alias_map_from_stats(surface_stats(mentions_of(ex)))
+    amap = _exact_alias_map(surface_stats(mentions_of(ex)))
     keys = (
         "spark.sql.autoBroadcastJoinThreshold",
         "spark.sql.adaptive.autoBroadcastJoinThreshold",
@@ -162,7 +171,6 @@ def test_edges_stage_scans_mention_snapshot_exactly_once(spark, tmp_path):
         surface_stats,
     )
     from progquery_spark.pipeline import edges_stage_frame
-    from progquery_spark.queries import _alias_map_from_stats
 
     tr = to_spark(spark, make_fixture(n_convs=4))
     snap = str(tmp_path / "exsnap_gate")
@@ -171,7 +179,7 @@ def test_edges_stage_scans_mention_snapshot_exactly_once(spark, tmp_path):
     mentions = mentions_of(ex)
     stats = surface_stats(mentions)
     entities = link_entities_from_stats(stats)
-    amap = _alias_map_from_stats(stats).localCheckpoint(eager=True)
+    amap = _exact_alias_map(stats).localCheckpoint(eager=True)
     tcanon = canonicalize_triples(triples_of(ex), amap).localCheckpoint(
         eager=True
     )
