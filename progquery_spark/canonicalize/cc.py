@@ -12,17 +12,19 @@ repeated to fixpoint. Properties that matter at scale:
 - every round is one shuffle (edges ⋈ labels) + one aggregation;
 - ``localCheckpoint()`` each round truncates lineage so the plan does not
   grow linearly with iterations (SURVEY.md §4.3.3);
-- convergence is detected with a cheap count of changed labels; rounds are
-  bounded (alias graphs are near-star-shaped: diameter ~2-4, so the bound
-  is slack, but it turns a pathological chain into a warning instead of a
-  hang);
+- convergence is detected without an extra job: each vertex's old label
+  rides through the round's aggregation (``max`` of its own-label column),
+  and an ``Observation`` on the round's eager checkpoint counts the
+  vertices whose label changed; rounds are bounded (alias graphs are
+  near-star-shaped: diameter ~2-4, so the bound is slack, but it turns a
+  pathological chain into a warning instead of a hang);
 - min-id tie-breaking makes the output deterministic regardless of
   partitioning (SURVEY.md §7.3.1).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -40,13 +42,15 @@ def connected_components(
     cheap at bench scale and still spreads a billion-edge graph at 100 TB.
     """
     # symmetrize once; dedup to keep the join small
+    sized = Observation()
     sym = (
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .dropDuplicates(["src", "dst"])
+        .observe(sized, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
-    n_edges = sym.count()
+    n_edges = sized.get["n"]
     n_parts = max(4, min(512, n_edges // 250_000 + 1))
     sym = sym.repartition(n_parts, "src").localCheckpoint(eager=True)
     labels = (
@@ -59,27 +63,27 @@ def connected_components(
     for _ in range(max_rounds):
         rounds += 1
         # candidate label for each vertex: min over its own label and its
-        # neighbors' labels
+        # neighbors' labels; the own row also carries the old label, so the
+        # same aggregation yields both sides of the changed-label test
         neighbor = (
             sym.join(labels, sym.dst == labels.id, "inner")
-            .select(sym.src.alias("id"), "component")
+            .select(
+                sym.src.alias("id"),
+                "component",
+                F.lit(None).cast("string").alias("old"),
+            )
         )
-        new_labels = (
-            labels.select("id", "component")
+        changed = Observation()
+        labels = (
+            labels.select("id", "component", F.col("component").alias("old"))
             .union(neighbor)
             .groupBy("id")
-            .agg(F.min("component").alias("component"))
+            .agg(F.min("component").alias("component"), F.max("old").alias("old"))
+            .observe(changed, F.count_if(F.col("component") != F.col("old")).alias("n"))
+            .select("id", "component")
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+        if changed.get["n"] == 0:
             break
     return labels, rounds
 

@@ -25,7 +25,9 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _has_iceberg(spark: SparkSession) -> bool:
@@ -37,27 +39,55 @@ def _has_iceberg(spark: SparkSession) -> bool:
         return False
 
 
-def write_stage(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    """Atomic stage write: stage to tmp dir, then rename into place."""
+def write_stage(df: DataFrame, path: str, partition_by: list[str] | None = None) -> int:
+    """Atomic stage write: stage to tmp dir, then rename into place.
+
+    Returns the rows written, counted by an ``Observation`` on the written
+    frame: the write job itself reports it, so no count job follows."""
     spark = df.sparkSession
+    written = Observation()
+    df = df.observe(written, F.count(F.lit(1)).alias("rows"))
     if _has_iceberg(spark) and not path.startswith("/"):
         # Iceberg table identifier (e.g. "pq.db.nodes"): atomic by snapshot
         df.writeTo(path).createOrReplace()
-        return
-    tmp = path + "._tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(tmp, path)
+    else:
+        tmp = path + "._tmp"
+        if os.path.exists(tmp):
+            shutil.rmtree(tmp)
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(tmp)
+        if os.path.exists(path):
+            shutil.rmtree(path)
+        os.rename(tmp, path)
+    return written.get["rows"]
 
 
-def read_stage(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+def read_stage(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
+    """A stage snapshot as a DataFrame. With ``schema`` (the one recorded
+    at commit) the read runs no Spark job; without it, parquet schema
+    inference reads a footer in a job of its own."""
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
+def file_row_counts(path: str) -> list[int]:
+    """Row count of every data file of a parquet snapshot, from the file
+    footers (driver-side reads, no Spark job), in sorted relative-path
+    order — partition subdirectories included."""
+    import pyarrow.parquet as pq
+
+    files = sorted(
+        os.path.relpath(os.path.join(root, name), path)
+        for root, _, names in os.walk(path)
+        for name in names
+        if name.endswith(".parquet") and not name.startswith(("_", "."))
+    )
+    return [pq.read_metadata(os.path.join(path, f)).num_rows for f in files]
 
 
 def iceberg_merge_statements(
@@ -98,7 +128,8 @@ def iceberg_merge_statements(
 
 
 class Manifest:
-    """``_pipeline_state`` manifest: stage name -> {rows, wall_ms, at}."""
+    """``_pipeline_state`` manifest: stage name -> {rows, wall_ms, at} plus,
+    for pipeline stages, the snapshot's ``schema`` (StructType JSON)."""
 
     def __init__(self, warehouse: str, run_id: str | None = None):
         self.warehouse = warehouse

@@ -19,17 +19,27 @@ separation is what licenses per-stage checkpointing):
 Each stage writes an atomic snapshot under the warehouse dir and records
 itself in the manifest; ``run(..., resume=True)`` skips completed stages by
 reading their snapshots — the kill-between-any-two-stages test drives this.
+A stage commit runs only the stage's own write: the manifest ``rows`` come
+from an ``Observation`` on the written frame, and the snapshot is read back
+with the written schema, which the manifest records too. Resume reads each
+completed stage with that recorded schema, so it runs zero Spark jobs (a
+record without one, from an older warehouse, falls back to inference).
 Per-stage lineage rows (run_id, stage, partition_id, rows_out, wall_ms) are
-appended to ``_lineage``.
+appended to ``_lineage`` from the committed files' parquet footers
+(``partition_id`` = written-file index; empty files get no row) by a
+driver-side write — lineage costs no Spark job either.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .canonicalize.cc import canonical_map, connected_components
 from .canonicalize.remap import canonicalize_triples
@@ -44,7 +54,7 @@ from .graph.materialize import (
     mention_id_frame,
 )
 from .graph.passes import consensus_modality, flow_edges, salted_mention_counts
-from .io.sinks import Manifest, read_stage, write_stage
+from .io.sinks import Manifest, file_row_counts, read_stage, write_stage
 from .linking.exact import (
     alias_edges_from_stats,
     link_entities_from_stats,
@@ -119,32 +129,49 @@ class Pipeline:
 
     def _materialize(self, stage: str, df: DataFrame, partition_by=None) -> DataFrame:
         t0 = time.time()
-        write_stage(df, self._path(stage), partition_by)
-        out = read_stage(self.spark, self._path(stage))
-        rows = out.count()
+        rows = write_stage(df, self._path(stage), partition_by)
+        out = read_stage(self.spark, self._path(stage), df.schema)
         wall_ms = int((time.time() - t0) * 1000)
-        self.manifest.record(stage, rows, wall_ms)
+        self.manifest.record(
+            stage, rows, wall_ms, {"schema": json.loads(out.schema.json())}
+        )
         if self.lineage:
-            self._record_lineage(stage, out, wall_ms)
+            self._record_lineage(stage, wall_ms)
         return out
 
-    def _record_lineage(self, stage: str, df: DataFrame, wall_ms: int) -> None:
-        lin = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows_out"))
-            .select(
-                F.lit(self.manifest.run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                F.col("partition_id"),
-                F.lit(None).cast("long").alias("input_rows"),
-                F.col("rows_out").cast("long"),
-                F.lit(wall_ms).cast("long").alias("wall_ms"),
-            )
+    def _record_lineage(self, stage: str, wall_ms: int) -> None:
+        """One row per non-empty written file, from its footer, appended
+        as one driver-side parquet file; types match ``LINEAGE_SCHEMA``."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        counts = [
+            (i, n) for i, n in enumerate(file_row_counts(self._path(stage))) if n
+        ]
+        lin = pa.table(
+            {
+                "run_id": pa.array([self.manifest.run_id] * len(counts), pa.string()),
+                "stage": pa.array([stage] * len(counts), pa.string()),
+                "partition_id": pa.array([i for i, _ in counts], pa.int32()),
+                "input_rows": pa.nulls(len(counts), pa.int64()),
+                "rows_out": pa.array([n for _, n in counts], pa.int64()),
+                "wall_ms": pa.array([wall_ms] * len(counts), pa.int64()),
+            }
         )
-        lin.write.mode("append").parquet(os.path.join(self.warehouse, "_lineage"))
+        d = os.path.join(self.warehouse, "_lineage")
+        os.makedirs(d, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        # dot-prefixed while written: readers skip hidden files
+        pq.write_table(lin, os.path.join(d, "." + name))
+        os.rename(os.path.join(d, "." + name), os.path.join(d, name))
 
     def _load(self, stage: str) -> DataFrame:
-        return read_stage(self.spark, self._path(stage))
+        schema = self.manifest.state["stages"].get(stage, {}).get("schema")
+        return read_stage(
+            self.spark,
+            self._path(stage),
+            StructType.fromJson(schema) if schema is not None else None,
+        )
 
     def _stage(self, stage: str, fn, resume: bool, partition_by=None) -> DataFrame:
         if resume and self.manifest.done(stage) and os.path.exists(self._path(stage)):

@@ -58,7 +58,7 @@ def build_parser() -> argparse.ArgumentParser:
         "--lineage",
         action=argparse.BooleanOptionalAction,
         default=True,
-        help="per-partition lineage rows in <warehouse>/_lineage",
+        help="per-file lineage rows (parquet footer counts) in <warehouse>/_lineage",
     )
     ap.add_argument(
         "--until",

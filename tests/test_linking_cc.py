@@ -21,6 +21,30 @@ def test_cc_trivial_chain(spark):
     assert rounds <= 5
 
 
+def test_cc_labels_and_rounds_pinned(spark):
+    """Labels and round counts on the trivial-chain fixture and two
+    10-vertex paths, pinned to the values of the previous convergence
+    check (a separate changed-labels join per round): carrying the old
+    label through the round's aggregation changes neither."""
+    chain = [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f")]
+    # min label at one end: it needs 9 hops, the 10th round sees no change
+    path = [(f"v{i}", f"v{i + 1}") for i in range(9)]
+    # min label mid-path (p5-p3-p7-p1-p8-p0-p9-p2-p6-p4)
+    order = ["p5", "p3", "p7", "p1", "p8", "p0", "p9", "p2", "p6", "p4"]
+    mid = list(zip(order, order[1:]))
+    want = {
+        "chain": ({"a": "a", "b": "a", "c": "a", "d": "d", "e": "d", "f": "f"}, 3),
+        "path": ({f"v{i}": "v0" for i in range(10)}, 10),
+        "mid": ({p: "p0" for p in order}, 6),
+    }
+    for name, rows in (("chain", chain), ("path", path), ("mid", mid)):
+        labels, rounds = connected_components(
+            spark.createDataFrame(rows, ["src", "dst"])
+        )
+        got = {r["id"]: r["component"] for r in labels.collect()}
+        assert (got, rounds) == want[name], name
+
+
 def test_exact_vs_cc_identity(spark):
     """Case-only aliases: CC canonical map must equal the identity on norm
     keys (exact-key join output == CC output, C2)."""

@@ -3,6 +3,7 @@ t-skew-smoke) + salted-agg equivalence."""
 
 import json
 import shutil
+import uuid
 
 import pyspark.sql.functions as F
 
@@ -58,6 +59,69 @@ def test_skew_smoke_and_lineage(spark, tmp_path):
     stages = {r["stage"] for r in lin.select("stage").distinct().collect()}
     assert "extraction" in stages and "edges" in stages
     assert lin.filter(F.col("rows_out") <= 0).count() == 0
+
+    # lineage rows are file-footer counts: per stage they sum to the
+    # manifest's Observation-counted rows
+    recs = {
+        s: r for s, r in p.manifest.state["stages"].items() if not s.startswith("_")
+    }
+    sums = {
+        r["stage"]: r["n"]
+        for r in lin.groupBy("stage").agg(F.sum("rows_out").alias("n")).collect()
+    }
+    assert {s: sums.get(s, 0) for s in recs} == {s: r["rows"] for s, r in recs.items()}
+
+    # the recorded schema is the one inference would find
+    for st in recs:
+        assert p._load(st).schema == spark.read.parquet(f"{wh}/{st}").schema, st
+
+    # an older warehouse (records without ``schema``) resumes by inference
+    m = json.load(open(f"{wh}/_pipeline_state.json"))
+    for rec in m["stages"].values():
+        rec.pop("schema", None)
+    json.dump(m, open(f"{wh}/_pipeline_state.json", "w"))
+    resumed = Pipeline(spark, wh, lineage=True).run(transcripts=tr, resume=True)
+    assert _counts(resumed) == {s: r["rows"] for s, r in recs.items()}
+
+
+def _jobs_in_group(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, read from the status tracker under a job
+    group of its own."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_resume_and_lineage_launch_no_jobs(spark, tmp_path):
+    """A resume reads recorded schemas (zero jobs); lineage reads file
+    footers on the driver (a lineage-on build launches exactly the jobs of
+    a lineage-off build of the same input)."""
+    tr = to_spark(spark, make_fixture(n_convs=6, seed=5))
+    jobs = {
+        lineage: _jobs_in_group(
+            spark,
+            lambda: Pipeline(spark, str(tmp_path / f"wh{lineage}"), lineage).run(
+                transcripts=tr, resume=False
+            ),
+        )
+        for lineage in (False, True)
+    }
+    assert jobs[True] == jobs[False] > 0
+    wh = str(tmp_path / "whTrue")
+    out = {}
+    resume_jobs = _jobs_in_group(
+        spark,
+        lambda: out.update(
+            Pipeline(spark, wh).run(transcripts=tr, resume=True, until="edges")
+        ),
+    )
+    assert resume_jobs == 0
+    assert "edges" in out and "modality" not in out
 
 
 def test_incremental_merge_equivalence(spark, tmp_path):
