@@ -15,6 +15,9 @@ multi-record computations in the system.
   mentions the subject asserts it, 'may' otherwise — computed with the
   reference's count-vs-candidate-count consensus trick as a real
   distributed aggregation.
+- G3/G4/G5 analogs (recursive walks): star traversals, entity
+  reachability and must-reach all run one semi-naive multi-source BFS
+  loop, ``_bfs``, with one stop test and one truncation rule.
 - Salted two-phase aggregation for hot keys (SURVEY.md §4.3.1): nations /
   priorities are Zipf-hot; mention counting goes groupBy(key, salt) ->
   groupBy(key) so no single reducer owns a hot key's entire mention set.
@@ -22,7 +25,9 @@ multi-record computations in the system.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import warnings
+
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from .materialize import node_id
@@ -167,6 +172,66 @@ def salted_mention_counts(
     )
 
 
+def _bfs(
+    frontier: DataFrame,
+    edges: DataFrame,
+    level: int,
+    max_level: int,
+    stacklevel: int = 3,
+) -> DataFrame:
+    """Semi-naive multi-source BFS — the one round loop behind
+    ``NodeSet.out_star``/``in_star``, ``entity_reachability`` and
+    ``must_reach_fixpoint``.
+
+    ``frontier(root, node)`` holds distinct seed pairs at BFS level
+    ``level``; ``edges(src, dst)`` must be deduplicated. Per round only the
+    previous frontier joins the edges (new facts only — the memoization
+    analog), deduplicates, anti-joins everything reached and cuts lineage
+    with an eager ``localCheckpoint``; an ``Observation`` on that
+    checkpoint counts the new frontier, so draining costs no extra job.
+    Returns (root, node, hops), hops = min distance, seeds included.
+
+    Truncation rule: when level ``max_level`` still has a non-empty
+    frontier, one more expansion runs as a probe (its rows are not kept)
+    and warns only if it reaches an unreached pair — a walk that drains
+    exactly at the bound is complete and stays silent. ``stacklevel``
+    points the warning at the public caller's call site.
+    """
+    reached = frontier.select(
+        "root", "node", F.lit(level).cast("int").alias("hops")
+    ).localCheckpoint(eager=True)
+    frontier = reached
+    for hop in range(level + 1, max_level + 2):
+        step = frontier.join(edges, frontier["node"] == edges["src"]).select(
+            "root", F.col("dst").alias("node")
+        )
+        if hop > max_level:
+            # the probe needs one unreached pair, not the whole level: no
+            # dedup, no checkpoint, a one-row take. Results beyond the
+            # bound diverge from the unbounded recursive-CTE oracles, so
+            # truncation is surfaced, never silent.
+            if step.join(reached, ["root", "node"], "left_anti").take(1):
+                warnings.warn(
+                    f"BFS truncated at the {max_level}-hop bound: reachable "
+                    "pairs beyond it are missing from the result (raise the "
+                    "bound or expect oracle divergence)",
+                    stacklevel=stacklevel,
+                )
+            break
+        counted = Observation()
+        frontier = (
+            step.dropDuplicates(["root", "node"])
+            .join(reached, ["root", "node"], "left_anti")
+            .withColumn("hops", F.lit(hop).cast("int"))
+            .observe(counted, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        if counted.get["n"] == 0:
+            break
+        reached = reached.unionByName(frontier).localCheckpoint(eager=True)
+    return reached
+
+
 def entity_reachability(
     canonical_triples: DataFrame, max_hops: int = 8
 ) -> DataFrame:
@@ -176,15 +241,17 @@ def entity_reachability(
     propagation of dynamic dispatch (HierarchyAnalysis.java:28-113) and the
     call-graph reachability of initialization analysis
     (ASTAuxiliarStorage.doInitializationAnalysis:169-202) — both memoized
-    single-JVM recursions. The distributed form is level-synchronous BFS:
-    ``frontier ⋈ edges`` per round, anti-join against the reached set, until
-    the frontier drains (SURVEY.md §2.6 G3/G5: "iterative join over the
-    DAG, bounded depth").
+    single-JVM recursions. The distributed form is level-synchronous BFS
+    (``_bfs``): ``frontier ⋈ edges`` per round, anti-join against the
+    reached set, until the frontier drains (SURVEY.md §2.6 G3/G5: "iterative
+    join over the DAG, bounded depth").
 
     Transcript graph: nation -> customer (reversed ``from_nation``), then
     customer -> order (``placed``), order -> part (``includes``) — a DAG of
     depth 3, so the bound is slack. Returns (root, node, hops) with
-    hops = BFS level = min distance; (root, root, 0) rows included.
+    hops = BFS level = min distance; (root, root, 0) rows included. Warns
+    "truncated" when pairs lie beyond ``max_hops``; a walk that drains
+    exactly at ``max_hops`` does not warn.
     """
     t = canonical_triples
     edges = (
@@ -208,36 +275,7 @@ def entity_reachability(
         .select(F.col("src").alias("root"))
         .distinct()
     )
-    frontier = roots.select(
-        "root", F.col("root").alias("node"), F.lit(0).cast("int").alias("hops")
-    ).localCheckpoint(eager=True)
-    reached = frontier
-    drained = False
-    for hop in range(1, max_hops + 1):
-        frontier = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select("root", F.col("dst").alias("node"))
-            .dropDuplicates(["root", "node"])
-            .join(reached, ["root", "node"], "left_anti")
-            .withColumn("hops", F.lit(hop).cast("int"))
-            .localCheckpoint(eager=True)
-        )
-        if frontier.isEmpty():
-            drained = True
-            break
-        reached = reached.unionByName(frontier).localCheckpoint(eager=True)
-    if not drained and not frontier.isEmpty():
-        # bound hit with work remaining: results beyond max_hops are
-        # TRUNCATED and will diverge from the unbounded recursive-CTE
-        # oracle (reachability_sql). Surface it loudly instead of silently.
-        import warnings
-
-        warnings.warn(
-            f"entity_reachability truncated at max_hops={max_hops}: "
-            "frontier non-empty; raise max_hops or expect oracle divergence",
-            stacklevel=2,
-        )
-    return reached
+    return _bfs(roots.withColumn("node", F.col("root")), edges, 0, max_hops)
 
 
 def must_reach_fixpoint(
@@ -251,66 +289,33 @@ def must_reach_fixpoint(
     ASTAuxiliarStorage.doInterproceduralPDGAnalysis:133-151): each
     method's final summary is its transitive view over must-executed
     callees. The distributed form is semi-naive transitive closure over
-    the 'must'-modality entity edges: per round, only the previous
-    frontier joins the edge set (new facts only — the memoization
-    analog), anti-joined against everything reached, localCheckpoint to
-    truncate lineage; rounds stop when no new pairs appear (fixpoint),
-    bounded by max_rounds. Type structure makes the must-graph a DAG
-    (customer -> {nation, order}, order -> part, part -> supplier), so
-    the bound is slack.
+    the 'must'-modality entity edges (``_bfs``, seeded with every edge at
+    hop 1): per round, only the previous frontier joins the edge set (new
+    facts only — the memoization analog), anti-joined against everything
+    reached, localCheckpoint to truncate lineage; rounds stop when no new
+    pairs appear (fixpoint), bounded by max_rounds. Type structure makes
+    the must-graph a DAG (customer -> {nation, order}, order -> part,
+    part -> supplier), so the bound is slack.
 
-    Returns (src, dst, hops) with hops = min must-path length >= 1.
-
-    NOTE (session-scoped side effect): the loop disables
-    ``spark.sql.constraintPropagation.enabled`` for its duration (restored
-    in ``finally``) to work around a Catalyst constraint-rewrite failure
-    on iterative self-unions of checkpointed frames; a concurrent query on
-    the SAME session observes the flipped conf while the loop runs. Run
-    fixpoint passes serially per session (the pipeline does).
+    Returns (src, dst, hops) with hops = min must-path length >= 1, up to
+    ``max_rounds``. Warns "truncated" when pairs lie beyond
+    ``max_rounds`` hops; a closure that drains exactly at the bound does
+    not warn.
     """
     from ..canonicalize.remap import OBJ_IS_ENTITY
 
-    spark = modality.sparkSession
-    # Workaround for a Catalyst constraint-rewrite failure on iterative
-    # self-unions: round-N's union children are checkpointed frames that
-    # still share attribute ids through the common `edges` lineage, and
-    # UnionBase.rewriteConstraints can throw `key not found: src#N` while
-    # planning the checkpoint (observed at sf0.01). Constraint propagation
-    # buys nothing for this loop (every round is materialized anyway), so
-    # scope it off and restore afterwards.
-    cp_key = "spark.sql.constraintPropagation.enabled"
-    cp_prev = spark.conf.get(cp_key, "true")
-    spark.conf.set(cp_key, "false")
-    try:
-        edges = (
-            modality.filter(
-                (F.col("modality") == "must") & F.col("pred").isin(*OBJ_IS_ENTITY)
-            )
-            .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-            .dropDuplicates(["src", "dst"])
-            .localCheckpoint(eager=True)
+    edges = (
+        modality.filter(
+            (F.col("modality") == "must") & F.col("pred").isin(*OBJ_IS_ENTITY)
         )
-        reached = edges.withColumn("hops", F.lit(1).cast("int")).localCheckpoint(
-            eager=True
-        )
-        frontier = reached
-        for hop in range(2, max_rounds + 1):
-            nxt = (
-                frontier.alias("f")
-                .join(edges.alias("e"), F.col("f.dst") == F.col("e.src"))
-                .select(F.col("f.src").alias("src"), F.col("e.dst").alias("dst"))
-                .dropDuplicates(["src", "dst"])
-                .join(reached, ["src", "dst"], "left_anti")
-                .withColumn("hops", F.lit(hop).cast("int"))
-                .localCheckpoint(eager=True)
-            )
-            if nxt.isEmpty():
-                break
-            reached = reached.unionByName(nxt).localCheckpoint(eager=True)
-            frontier = nxt
-    finally:
-        spark.conf.set(cp_key, cp_prev)
-    return reached
+        .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
+        .dropDuplicates(["src", "dst"])
+        .localCheckpoint(eager=True)
+    )
+    seeds = edges.select(F.col("src").alias("root"), F.col("dst").alias("node"))
+    return _bfs(seeds, edges, 1, max_rounds).select(
+        F.col("root").alias("src"), F.col("node").alias("dst"), "hops"
+    )
 
 
 def consensus_modality(canonical_triples: DataFrame) -> DataFrame:

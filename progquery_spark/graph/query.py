@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .passes import _bfs
+
 #: columns every node row carries (materialize._pad's uniform schema)
 _RESERVED = ("src_", "edge_")
 
@@ -165,15 +167,19 @@ class NodeSet:
 
         Unlike single hops this is NOT lazy: level-synchronous BFS needs
         an action per round (frontier ⋈ edges, dedup, anti-join reached,
-        ``localCheckpoint`` to cut the exponential lineage — the same
-        discipline as canonicalize.cc and graph.passes.entity_reachability,
-        SURVEY §2.6 G3/G5). Start rows are deduplicated to distinct
-        (node_id, carried...) tuples first (min-distance is per start
-        NODE); the BFS itself runs once per distinct node_id and carried
-        context re-attaches by join afterwards, so duplicate contexts
-        don't multiply traversal work. Truncation at ``max_hops`` with a
-        non-empty frontier warns loudly (oracle divergence risk) instead
-        of silently dropping reachable nodes. ``edge_where`` (Cypher's
+        ``localCheckpoint`` to cut the exponential lineage). The rounds
+        run in ``graph.passes._bfs``, the one semi-naive BFS loop shared
+        with ``entity_reachability`` and ``must_reach_fixpoint`` (SURVEY
+        §2.6 G3/G5); an ``Observation`` on each round's checkpoint counts
+        the frontier, as in canonicalize.cc. Start rows are deduplicated
+        to distinct (node_id, carried...) tuples first (min-distance is
+        per start NODE); the BFS itself runs once per distinct node_id and
+        carried context re-attaches by join afterwards, so duplicate
+        contexts don't multiply traversal work. Truncation follows the
+        helper's one rule: if the hop-``max_hops`` frontier is non-empty,
+        one probe expansion runs and warns "truncated" only when it
+        reaches unreached nodes — a walk that drains exactly at the bound
+        stays silent. ``edge_where`` (Cypher's
         ``-[r:R*m..k WHERE r.p]->``) filters the edge set ONCE before the
         BFS — every traversed level crosses only predicate-passing
         edges."""
@@ -217,8 +223,8 @@ class NodeSet:
         if edge_where is not None:
             e = e.filter(edge_where)
         edges = e.select(
-            F.col(here).alias("__src"), F.col(there).alias("__dst")
-        ).dropDuplicates(["__src", "__dst"])
+            F.col(here).alias("src"), F.col(there).alias("dst")
+        ).dropDuplicates(["src", "dst"])
         kept = [c for c in self._df.columns if c.startswith(_RESERVED)]
         for c in carry:
             if f"src_{c}" in kept:
@@ -249,57 +255,14 @@ class NodeSet:
                 "the star hop"
             )
         starts = starts.dropDuplicates()
-        frontier = (
-            starts.select("__root")
-            .distinct()
-            .select(
-                "__root",
-                F.col("__root").alias("__node"),
-                F.lit(0).cast("int").alias("hops"),
-            )
-            .localCheckpoint(eager=True)
+        seeds = starts.select(
+            F.col("__root").alias("root"), F.col("__root").alias("node")
+        ).distinct()
+        # stacklevel 4: the warning names the line that called out_star /
+        # in_star (-> _star -> _bfs), not a frame inside this package
+        reached = _bfs(seeds, edges, 0, max_hops, stacklevel=4).select(
+            F.col("root").alias("__root"), F.col("node").alias("__node"), "hops"
         )
-        reached = frontier
-        drained = False
-        for hop in range(1, max_hops + 1):
-            frontier = (
-                frontier.join(edges, frontier["__node"] == edges["__src"])
-                .select("__root", F.col("__dst").alias("__node"))
-                .dropDuplicates(["__root", "__node"])
-                .join(reached, ["__root", "__node"], "left_anti")
-                .withColumn("hops", F.lit(hop).cast("int"))
-                .localCheckpoint(eager=True)
-            )
-            if frontier.isEmpty():
-                drained = True
-                break
-            reached = reached.unionByName(frontier).localCheckpoint(eager=True)
-        if not drained:
-            # the hop-max_hops frontier is non-empty, but that alone does
-            # not mean anything was dropped — a walk that drains EXACTLY
-            # at the bound (last layer at distance max_hops, nothing
-            # beyond) is complete. Pay one extra expansion to warn only on
-            # TRUE truncation; a false "missing nodes" warning on every
-            # bounded query is noise that trains users to ignore the real
-            # one.
-            beyond = (
-                frontier.join(edges, frontier["__node"] == edges["__src"])
-                .select("__root", F.col("__dst").alias("__node"))
-                .join(reached, ["__root", "__node"], "left_anti")
-            )
-            if not beyond.isEmpty():
-                import warnings
-
-                warnings.warn(
-                    f"star hop truncated at max_hops={max_hops}: "
-                    "reachable nodes beyond the bound are missing from "
-                    "the result (raise max_hops or expect oracle "
-                    "divergence)",
-                    # warn is 2 frames below the user's call site
-                    # (out_star/in_star -> _star), so 3 attributes the
-                    # warning to THEIR line, not the wrapper's
-                    stacklevel=3,
-                )
         hits = reached.filter(F.col("hops") >= min_hops)
         dst = self._g.nodes
         if into is not None:

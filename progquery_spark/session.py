@@ -1,9 +1,10 @@
 """SparkSession construction with scale-appropriate defaults.
 
 Single place where execution knobs live so tests, bench, and the driver
-entrypoint share one configuration story. Defaults are tuned for the
-sandbox (local[N], 128 GiB, parquet on local disk) but every knob is the
-one you would set on a 1000-executor cluster too:
+entrypoint share one configuration story. Defaults are tuned for a
+single host (local[N], a driver heap of at most half its RAM, parquet on
+local disk) but every knob is the one you would set on a 1000-executor
+cluster too:
 
 - AQE on (runtime coalescing + skew-join splitting — SURVEY.md §4.2),
 - Arrow transport for pandas UDFs,
@@ -20,6 +21,23 @@ from pyspark.sql import SparkSession
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def default_driver_memory(cores: int, meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` default: ``max(16, 2*cores)`` GiB, capped at
+    half of the host's ``MemTotal`` so the heap, the Python workers and a
+    tmpfs spill dir fit in RAM instead of the kernel killing the JVM.
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides it in ``get_spark``."""
+    mib = max(16, 2 * cores) * 1024
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    mib = min(mib, max(1024, int(line.split()[1]) // 2048))
+                    break
+    except OSError:
+        pass
+    return f"{mib}m"
 
 
 def get_spark(
@@ -59,7 +77,7 @@ def get_spark(
         # stages ~2x slower at local[32] vs local[8] on an 8g heap)
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(16, 2 * cores)}g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory(cores)),
         )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -5,6 +5,9 @@ and resumes."""
 import json
 import subprocess
 import sys
+from pathlib import Path
+
+ROOT = str(Path(__file__).resolve().parents[1])
 
 
 def _run(args):
@@ -13,7 +16,7 @@ def _run(args):
         capture_output=True,
         text=True,
         timeout=420,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     line = [ln for ln in out.stdout.strip().splitlines() if ln.startswith("{")][-1]
@@ -61,7 +64,7 @@ def test_cli_stream_mode(tmp_path):
 
     import pandas as pd
 
-    _sys.path.insert(0, "/root/repo")
+    _sys.path.insert(0, ROOT)
     from progquery_spark.fixtures import make_fixture
 
     pdf = pd.DataFrame(make_fixture(n_convs=3).rows)
@@ -127,7 +130,7 @@ def test_cli_stream_path_has_no_memory_sink():
     import pathlib
     import sys as _sys
 
-    _sys.path.insert(0, "/root/repo")
+    _sys.path.insert(0, ROOT)
     # resolve sources from the imported package, not hardcoded absolute
     # paths, so the gate checks THIS checkout wherever it lives (ADVICE r4)
     import progquery_spark.run as _run_mod
@@ -151,12 +154,12 @@ def test_spark_submit_pyfiles(tmp_path):
     import os
     import shutil
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, f"{ROOT}/tools")
     from build_zip import build
 
     zip_path = build(str(tmp_path / "progquery_spark.zip"))
     main_py = str(tmp_path / "submit_main.py")
-    shutil.copy("/root/repo/tools/submit_main.py", main_py)
+    shutil.copy(f"{ROOT}/tools/submit_main.py", main_py)
 
     spark_submit = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
@@ -199,7 +202,7 @@ def test_cli_requires_input(tmp_path):
         capture_output=True,
         text=True,
         timeout=60,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert out.returncode != 0
     assert "--input or --transcripts" in out.stderr
@@ -211,7 +214,7 @@ def _expect_parser_error(args, needle):
         capture_output=True,
         text=True,
         timeout=60,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert out.returncode != 0
     assert needle in out.stderr, out.stderr[-2000:]

@@ -594,14 +594,24 @@ def test_text_quality_bands_partition(spark):
     assert {r["quality_band"] for r in bands} <= {"high", "medium", "low"}
 
 
+def _truncation_warnings(fn):
+    import warnings
+
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        out = fn()
+    return out, [x for x in w if "truncated" in str(x.message)]
+
+
 def test_reachability_bfs_levels(spark):
-    """G3/G5 analog: BFS levels are minimal distances; roots at hop 0."""
+    """G3/G5 analog: BFS levels are minimal distances; roots at hop 0.
+    A walk cut one level short warns; one that drains exactly at the
+    bound (the part level is the last) does not."""
     from progquery_spark.graph.passes import entity_reachability
     from progquery_spark.queries import q_triples_canonical
 
-    r = entity_reachability(
-        q_triples_canonical(spark, "/root/testdata/sf0.001")
-    ).toPandas()
+    triples = q_triples_canonical(spark, "/root/testdata/sf0.001")
+    r = entity_reachability(triples).toPandas()
     assert (r[r.root == r.node].hops == 0).all()
     by_hop = r.groupby("hops").size()
     # nation -> customer -> order -> part: exactly 4 levels on this corpus
@@ -610,6 +620,46 @@ def test_reachability_bfs_levels(spark):
     lvl = {1: "customer:", 2: "order:", 3: "part:"}
     for h, pfx in lvl.items():
         assert r[r.hops == h].node.str.startswith(pfx).all()
+
+    short, warned = _truncation_warnings(
+        lambda: entity_reachability(triples, max_hops=2).toPandas()
+    )
+    assert warned
+    assert len(short) == (r.hops <= 2).sum()
+    exact, warned = _truncation_warnings(
+        lambda: entity_reachability(triples, max_hops=3).toPandas()
+    )
+    assert not warned
+    assert len(exact) == len(r)
+
+
+def test_must_reach_chain_bounds_and_truncation(spark):
+    """G4 fixpoint over a 4-edge must chain a->b->c->d->e: the full
+    closure (10 pairs, hops 1-4) drains at max_rounds=4 without a
+    warning; max_rounds=2 keeps the 7 pairs of hops <= 2 and warns."""
+    from progquery_spark.graph.passes import must_reach_fixpoint
+
+    chain = "abcde"
+    modality = spark.createDataFrame(
+        [(s, "placed", d, "must") for s, d in zip(chain, chain[1:])]
+        # a 'may' edge and a non-entity pred never enter the closure
+        + [("e", "placed", "f", "may"), ("a", "name", "z", "must")],
+        "subj string, pred string, obj string, modality string",
+    )
+    full = {(chain[i], chain[j], j - i) for i in range(5) for j in range(i + 1, 5)}
+
+    rows, warned = _truncation_warnings(
+        lambda: must_reach_fixpoint(modality, max_rounds=4).collect()
+    )
+    assert {tuple(r) for r in rows} == full and len(rows) == 10
+    assert not warned
+
+    rows, warned = _truncation_warnings(
+        lambda: must_reach_fixpoint(modality, max_rounds=2).collect()
+    )
+    assert {tuple(r) for r in rows} == {p for p in full if p[2] <= 2}
+    assert len(rows) == 7
+    assert warned
 
 
 def test_trained_codebook_matches_oracle_training(spark):

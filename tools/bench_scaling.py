@@ -21,9 +21,11 @@ import subprocess
 import sys
 import time
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def prepare_input(sf_dir: str, mult: int, path: str) -> None:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from pyspark.sql import functions as F
 
     from progquery_spark.datagen import build_transcripts
@@ -59,7 +61,7 @@ def run_level(cpus: int, path: str, attempts: int = 2) -> dict:
             # quietly uses 6-8 — pinning is the honest N-executor stand-in
             out = subprocess.run(
                 ["taskset", "-c", f"0-{cpus - 1}", sys.executable,
-                 "/root/repo/tools/scaling_job.py", str(cpus), path],
+                 os.path.join(ROOT, "tools", "scaling_job.py"), str(cpus), path],
                 capture_output=True,
                 text=True,
                 check=True,
@@ -154,11 +156,11 @@ def main() -> None:
         for p in pair_results
     )
     any_turns = best[levels[0]]["turns"]
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
     # hand-written measured addenda (bucketed-path runs, e2e composition)
     # live below the generated block — preserve them across regeneration
     addendum = ""
-    baseline_path = "/root/repo/BENCH/BASELINE.md"
+    baseline_path = os.path.join(ROOT, "BENCH", "BASELINE.md")
     if os.path.exists(baseline_path):
         with open(baseline_path) as f:
             old = f.read()

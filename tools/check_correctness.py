@@ -13,10 +13,13 @@ Usage: python tools/check_correctness.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _norm_cell(v) -> str:
@@ -42,14 +45,12 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as entry_mod
     from progquery_spark.session import get_spark, TPCH_TABLES
 
     spark = get_spark("check-correctness")
     con = duckdb.connect()
-    import os
-
     for name in TPCH_TABLES:
         p = f"{sf_dir}/{name}.parquet"
         if os.path.exists(p):

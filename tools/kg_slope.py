@@ -30,8 +30,10 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo/tools")
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+sys.path.insert(0, os.path.join(ROOT, "tools"))
+sys.path.insert(0, ROOT)
 from bench_scaling import prepare_input  # noqa: E402
 
 
@@ -53,7 +55,7 @@ def run_pipeline(cpus: int, transcripts: str) -> dict[str, dict]:
             capture_output=True,
             text=True,
             check=True,
-            cwd="/root/repo",
+            cwd=ROOT,
             timeout=3600,
         )
         with open(os.path.join(wh, "_pipeline_state.json")) as f:

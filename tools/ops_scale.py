@@ -40,6 +40,8 @@ import os
 import sys
 import time
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # 16k words -> ~270M possible 2-grams: postings stay sparse at 2M docs
 # (mean df ~0.3) the way a natural Zipf tail does, so the inverted-index
 # baseline measures verify cost, not an artificial small-vocab blow-up;
@@ -50,7 +52,7 @@ BOILER = " ".join(f"bp{i}" for i in range(12))
 
 
 def prepare(out_dir: str, n_docs: int, n_vecs: int) -> None:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from pyspark.sql import functions as F
 
     from progquery_spark.session import get_spark
@@ -202,7 +204,7 @@ def _timed(name, mk, results):
 
 
 def probe(corpus: str) -> None:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from progquery_spark.ops import dedup
     from progquery_spark.session import get_spark
 
@@ -228,7 +230,7 @@ def _pack_buckets(spark, corpus: str) -> int:
 
 
 def run(corpus: str, cpus: int, only: set[str]) -> None:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from progquery_spark.ops import dedup, sampling, similarity, text
     from progquery_spark.session import get_spark
 
@@ -332,8 +334,8 @@ def pair(corpus: str, lo: int, hi: int, reps: int, only: list[str]) -> None:
         for cpus in (lo, hi):
             out = subprocess.run(
                 ["taskset", "-c", f"0-{cpus - 1}", sys.executable,
-                 "/root/repo/tools/ops_scale.py", "run", corpus, str(cpus),
-                 *only],
+                 os.path.join(ROOT, "tools", "ops_scale.py"), "run", corpus,
+                 str(cpus), *only],
                 capture_output=True, text=True, check=True, timeout=3600,
             )
             line = [

@@ -14,12 +14,14 @@ bench_scaling.py and shared verbatim between parallelism levels (the
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def main() -> None:
-    import os
 
     cpus = int(sys.argv[1])
     input_path = sys.argv[2]
@@ -34,7 +36,7 @@ def main() -> None:
     # split mid-conversation (whole-file packing is fine).
     bucketed = os.environ.get("SCALING_BUCKETED", "0") == "1"
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from progquery_spark.session import get_spark
     from progquery_spark.canonicalize.cc import canonical_map, connected_components
     from progquery_spark.canonicalize.remap import canonicalize_triples

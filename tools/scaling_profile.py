@@ -8,8 +8,11 @@ non-scaling fixed cost that caps scaling efficiency.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
@@ -17,7 +20,7 @@ def main() -> None:
     input_path = sys.argv[2]
     shuffle = int(sys.argv[3]) if len(sys.argv) > 3 else 64
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from progquery_spark.session import get_spark
     from progquery_spark.canonicalize.cc import canonical_map, connected_components
     from progquery_spark.canonicalize.remap import canonicalize_triples
